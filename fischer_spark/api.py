@@ -12,9 +12,12 @@ until an action on `.df`.
 
 from __future__ import annotations
 
+import numbers
+import os
+import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fischer_spark.operators.detect import (
@@ -322,6 +325,81 @@ class Series:
 _TIER_S = {"1m": 60, "1h": 3600, "1d": 86400}
 
 
+def _check_step(name: str, step_s) -> None:
+    """Steps are whole positive seconds.  Unchecked, 0 picks the 1d tier
+    (``0 % 86400 == 0``) and fails only at collect on a divide by zero,
+    and a negative step is served as if it were positive."""
+    if isinstance(step_s, bool) or not isinstance(step_s, numbers.Integral) or step_s <= 0:
+        raise ValueError(
+            f"{name} must be a positive integer number of seconds, got {step_s!r}"
+        )
+
+
+# -- serving views: the live key-encoded tiers, decoded once and cached -------
+
+
+@dataclass
+class _View:
+    snaps: tuple[str, str]  # (tier snapshot id, key_dim snapshot id)
+    spark: SparkSession
+    df: DataFrame
+
+
+# Keyed by (store root, table) rather than held by a store object, so
+# every store opened at one root shares its views and at most one view
+# per tier table is cached however many store objects a process makes.
+_VIEWS: dict[tuple[str, str], _View] = {}
+_VIEWS_LOCK = threading.Lock()
+
+
+def _serving_view(store, table: str) -> DataFrame | None:
+    """The current snapshot of key-encoded tier ``table`` joined once to
+    ``key_dim`` and cached — what query_range / query_range_hist read
+    instead of re-reading and re-joining both tables per query.
+
+    One view per (store root, table).  Its key is the (table, key_dim)
+    current snapshot ids, read from the manifests on every call, and
+    both tables are read pinned at those ids, so a commit to either is
+    seen by the next query.  That query builds the new view and
+    unpersists the superseded one without blocking; a query still
+    running on the old view recomputes from its snapshot files, which
+    compaction leaves on disk.
+
+    None (the caller reads per query) for a store without snapshot
+    manifests, a day-partitioned table (its reads prune days), a table
+    without key_id, or a store with no key_dim."""
+    from fischer_spark.operators.series import decode_series_keys
+    from fischer_spark.sources.storage import ParquetManifestStore
+
+    if not isinstance(store, ParquetManifestStore):
+        return None
+    key = (os.path.abspath(store.root), table)
+    with _VIEWS_LOCK:
+        for attempt in range(3):
+            snaps = (store.current_snapshot(table), store.current_snapshot("key_dim"))
+            if None in snaps or any(e.get("day_col") for e in store.snapshots(table)):
+                return None
+            old = _VIEWS.get(key)
+            if old is not None and old.snaps == snaps and old.spark is store.spark:
+                return old.df
+            try:
+                states = store.read(table, snaps[0])
+                dim = store.read("key_dim", snaps[1])
+                break
+            except ValueError:
+                # a compaction dropped the snapshot between the manifest
+                # read and the pinned read: take the new current ids
+                if attempt == 2:
+                    raise
+        if "key_id" not in states.columns:
+            return None
+        view = decode_series_keys(states, dim).drop("key_id").cache()
+        _VIEWS[key] = _View(snaps, store.spark, view)
+    if old is not None and old.spark is store.spark:
+        old.df.unpersist(blocking=False)
+    return view
+
+
 def query_range(
     store,
     metric: str,
@@ -370,13 +448,23 @@ def query_range(
     ============  =====================================================
 
     Tier selection: the coarsest materialized tier whose bucket divides
-    ``step_s`` — so a 2h-step query touches 1/3600 of the raw rows via
-    the 1h tier and re-buckets by EXACT state addition (never
-    recomputing from raw).  Label/time predicates are plain column
-    filters, pushed into the tier scan by Catalyst.  A step no tier
-    divides errors loudly unless ``allow_raw=True``, which serves it
-    from the compressed chunk store instead (zone-map-pruned decode of
-    the window's chunks, exact decimal aggregation at ``step_s``).
+    ``step_s`` (a positive integer; anything else raises ValueError) —
+    so a 2h-step query touches 1/3600 of the raw rows via the 1h tier
+    and re-buckets by EXACT state addition (never recomputing from
+    raw).  Label/time predicates are plain column filters over the tier
+    rows.  A step no tier divides errors loudly unless
+    ``allow_raw=True``, which serves it from the compressed chunk store
+    instead (zone-map-pruned decode of the window's chunks, exact
+    decimal aggregation at ``step_s``).
+
+    A key-encoded live tier is served from its cached decoded view
+    (``_serving_view``): the tier joined once to ``key_dim`` at their
+    current snapshot ids and held in Spark storage memory, rebuilt by
+    the first query after a commit to either table, so answers are
+    never stale and repeated queries on an unchanged store read no
+    parquet.  ``include_archive=True``, an explicit ``key_dim=`` and a
+    day-partitioned tier table read per query instead, with day
+    pruning.
 
     Returns (domain, metric, tag, bucket_ts, value) rows where value is
     the requested stat (mean/min/max/count/sum) derived from the merged
@@ -411,6 +499,7 @@ def query_range(
         with_derived_stats,
     )
 
+    _check_step("step_s", step_s)
     group_labels = _vector_agg_labels(by, without)
     if avg_weight not in ("points", "series"):
         raise ValueError(
@@ -485,6 +574,8 @@ def query_range(
         from fischer_spark.operators.archive import read_tier_with_archive
 
         states = read_tier_with_archive(store, tier, t_from=start, t_to=end)
+    elif key_dim is None and (view := _serving_view(store, f"rollup_{tier}")) is not None:
+        states = view
     else:
         states = store.read(
             f"rollup_{tier}", t_from=start, t_to=end
@@ -792,6 +883,8 @@ def subquery_range(
 
     Oracle-gated fixture form: queries_extended.subquery_max_rate_events.
     """
+    _check_step("inner_step_s", inner_step_s)
+    _check_step("outer_step_s", outer_step_s)
     if outer_step_s % inner_step_s:
         raise ValueError(
             f"outer_step_s={outer_step_s} must be a multiple of "
@@ -943,7 +1036,10 @@ def query_range_hist(
     aggregated series to share bin edges — guaranteed within a metric
     family; pass ``metric=`` (or have one family) or the param
     validation below refuses.  Dropped labels return as NULLs.
-    Key-encoded tiers decode through key_dim before grouping.
+    Key-encoded tiers decode through key_dim before grouping.  A live
+    key-encoded hist tier is read from the same cached decoded view as
+    query_range's tiers (see there); ``include_archive=True`` and a
+    day-partitioned tier read per query.
 
     ``include_archive=True`` additionally decodes the zone-map-pruned
     ``archive_hist_{tier}`` chunks (operators/archive.py) and unions
@@ -960,6 +1056,7 @@ def query_range_hist(
     """
     from fischer_spark.operators.histogram import hist_quantile
 
+    _check_step("step_s", step_s)
     tier = next(
         (t for t in ("1d", "1h") if step_s % _TIER_S[t] == 0), None
     )
@@ -1009,6 +1106,8 @@ def query_range_hist(
         h = read_tier_with_archive(
             store, tier, t_from=start, t_to=end, table_prefix="hist"
         )
+    elif (view := _serving_view(store, f"hist_{tier}")) is not None:
+        h = view  # decoded: the label filters below are plain column filters
     else:
         h = store.read(f"hist_{tier}", t_from=start, t_to=end)
     h = h.filter(

@@ -18,6 +18,13 @@ interface with TWO backends:
 
 Engine code never touches paths directly — everything goes through the
 store, so swapping backends is a constructor change.
+
+Snapshot directories are written ``errorifexists`` and never change, so
+`ParquetManifestStore` resolves each snapshot's parquet relation (file
+listing + schema inference, a Spark job of its own) once per store and
+reuses it on every later read; only the manifest is re-read per call, so
+a commit is visible to the next read.  `compact` forgets the relations
+of the snapshots it drops from the manifest.
 """
 
 from __future__ import annotations
@@ -52,6 +59,10 @@ def _atomic_write_json(path: str, obj: Any) -> None:
 class ParquetManifestStore:
     spark: SparkSession
     root: str
+    # snapshot path -> its resolved parquet relation (see read())
+    _relations: dict[str, DataFrame] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self.root, table, "manifest.json")
@@ -142,7 +153,13 @@ class ParquetManifestStore:
         boundary-day rows outside the exact window survive, callers
         apply their exact row filters as before (the same contract as
         Iceberg partition pruning vs residual predicates).  Unpartitioned
-        snapshots in the chain are unaffected."""
+        snapshots in the chain are unaffected.
+
+        The manifest is re-read on every call; each snapshot's parquet
+        relation is resolved on its first read and reused after that
+        (snapshot dirs are immutable), so reading an unchanged snapshot
+        again launches no Spark job until an action runs.  A relation is
+        forgotten when `compact` drops its snapshot from the manifest."""
         m = self._manifest(table)
         target = snapshot_id or m["current"]
         if target is None:
@@ -155,7 +172,11 @@ class ParquetManifestStore:
         else:
             raise ValueError(f"snapshot {target!r} not found in {table!r}")
         def _load(e: dict) -> DataFrame:
-            part = self.spark.read.parquet(e["path"])
+            part = self._relations.get(e["path"])
+            if part is None:
+                part = self._relations.setdefault(
+                    e["path"], self.spark.read.parquet(e["path"])
+                )
             if "_day" in part.columns:
                 if t_from is not None:
                     part = part.filter(F.col("_day") >= F.to_date(F.lit(t_from)))
@@ -238,12 +259,9 @@ class ParquetManifestStore:
         manifest analogue of Iceberg rewrite_data_files + expire_snapshots).
         The partition spec survives: if any commit in the chain was
         day-partitioned, the compacted snapshot is too."""
+        dropped = self._manifest(table)["snapshots"]
         day_col = next(
-            (
-                e.get("day_col")
-                for e in reversed(self._manifest(table)["snapshots"])
-                if e.get("day_col")
-            ),
+            (e.get("day_col") for e in reversed(dropped) if e.get("day_col")),
             None,
         )
         df = self.read(table).cache()
@@ -269,6 +287,8 @@ class ParquetManifestStore:
         }
         _atomic_write_json(self._manifest_path(table), m)
         df.unpersist()
+        for e in dropped:
+            self._relations.pop(e.get("path"), None)
         return snap
 
 

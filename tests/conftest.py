@@ -12,7 +12,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="fischer_spark_tests", master="local[8]", shuffle_partitions=8)
+    # master from SPARK_GRAFT_CPUS (get_spark's default), so the suite
+    # never runs more task threads than the cores it was given
+    s = get_spark(app_name="fischer_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 
@@ -53,3 +55,21 @@ def assert_df_equal(a, b, sort_cols=None, tol=0.0):
                 ), f"column {c} differs beyond {tol}"
             else:
                 assert pa[c].equals(pb[c]), f"column {c} differs"
+
+
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts on this thread, counted under
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -893,3 +893,252 @@ def test_fluent_calendar_rollup_matches_pipeline_tier(pages):
     )
     assert fb.keys() == ex.keys() and len(fb) > 0
     assert any(abs(fb[k] - ex[k]) > 1e-9 for k in fb)
+
+
+# -- step validation ------------------------------------------------------------
+
+
+def test_step_must_be_a_positive_integer(spark, tmp_path):
+    """A zero, negative or non-integer step raises up front: 0 used to
+    pick the 1d tier and fail at collect on a divide by zero, and a
+    negative step was served as if it were positive."""
+    import pytest
+
+    from fischer_spark.api import query_range, query_range_hist, subquery_range
+    from fischer_spark.sources.storage import ParquetManifestStore
+
+    store = ParquetManifestStore(spark, str(tmp_path / "w"))
+    win = ("2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    calls = {
+        "query_range": lambda s: query_range(store, "m", *win, s),
+        "query_range_hist": lambda s: query_range_hist(store, "m", *win, s, 0.5),
+        "subquery_range inner": lambda s: subquery_range(store, "m", *win, s, 3600),
+        "subquery_range outer": lambda s: subquery_range(store, "m", *win, 60, s),
+    }
+    for name, call in calls.items():
+        for bad in (0, -3600, 3600.0, True, "3600", None):
+            with pytest.raises(ValueError, match="positive integer"):
+                call(bad)
+
+
+# -- serving views ----------------------------------------------------------------
+
+_WIN = ("2023-12-25 00:00:00", "2024-01-20 00:00:00")
+_HIST_PARAMS = {"page_size": (0.0, float(1 << 20), 64)}
+
+
+def _encoded_tiers(spark, n_pages, seed, prefix=""):
+    """(rollup_1h, hist_1h, key_dim) of synthetic pages, key-encoded as
+    the pipeline's fast path writes them; ``prefix`` renames the domains
+    so the keys are new."""
+    from fischer_spark.operators.histogram import hist_states_families
+    from fischer_spark.operators.rollup import rollup_points
+    from fischer_spark.operators.series import build_series, encode_series_keys
+    from fischer_spark.sources.pages import synth_pages
+
+    pages = synth_pages(spark, n_pages, seed=seed).selectExpr(
+        f"concat('{prefix}', parse_url(url, 'HOST')) AS domain", "warc_ts",
+        "octet_length(html) AS page_bytes", "lang",
+    )
+    enc, dim = encode_series_keys(build_series(pages).cache())
+    return (
+        rollup_points(enc, "1h", impl="fixed64"),
+        hist_states_families(enc, "1h", _HIST_PARAMS, key_dim=dim),
+        dim,
+    )
+
+
+def _serving_store(spark, root):
+    from fischer_spark.sources.storage import ParquetManifestStore
+
+    store = ParquetManifestStore(spark, root)
+    rollup, hist, dim = _encoded_tiers(spark, 1500, seed=7)
+    store.append("key_dim", dim)
+    store.append("rollup_1h", rollup)
+    store.append("hist_1h", hist)
+    store.set_meta(
+        "hist_1h", hist_params={m: list(p) for m, p in _HIST_PARAMS.items()}
+    )
+    return store
+
+
+def _copy_store(store, root):
+    """A new store over a copy of ``store``'s files, with the manifests
+    pointed at the copy: it shares no relation, view or cached plan with
+    ``store``."""
+    import glob
+    import os
+    import shutil
+
+    from fischer_spark.sources.storage import ParquetManifestStore
+
+    shutil.copytree(store.root, root)
+    for path in glob.glob(os.path.join(root, "*", "manifest.json")):
+        with open(path) as f:
+            text = f.read()
+        with open(path, "w") as f:
+            f.write(text.replace(store.root, root))
+    return ParquetManifestStore(store.spark, root)
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _answers(store):
+    """(query_range, query_range_hist) rows over every series in _WIN."""
+    from fischer_spark.api import query_range, query_range_hist
+
+    return (
+        _rows(query_range(store, "crawl_rate", *_WIN, 7200)),
+        _rows(query_range_hist(store, "page_size", *_WIN, 7200, 0.95)),
+    )
+
+
+def _view(store, table):
+    import os
+
+    from fischer_spark import api
+
+    return api._VIEWS.get((os.path.abspath(store.root), table))
+
+
+def test_serving_view_equals_per_query_decode(spark, tmp_path):
+    """The cached decoded view answers exactly as the per-query read and
+    key_dim join it replaces (an explicit key_dim= bypasses the view)."""
+    from fischer_spark.api import query_range
+
+    store = _serving_store(spark, str(tmp_path / "w"))
+    got = _rows(query_range(store, "crawl_rate", *_WIN, 7200, by=("domain",)))
+    want = _rows(
+        query_range(
+            store, "crawl_rate", *_WIN, 7200, by=("domain",),
+            key_dim=store.read("key_dim"),
+        )
+    )
+    assert got == want and len(got) > 0
+    assert _view(store, "rollup_1h").df.storageLevel.useMemory
+
+
+def test_serving_view_fresh_after_every_commit_kind(spark, tmp_path):
+    """After append / overwrite_range / delete_below / compact on a tier
+    or on key_dim, the next answers equal a fresh store's, and every view
+    the commit superseded is unpersisted while the others stay."""
+    from pyspark import StorageLevel
+
+    store = _serving_store(spark, str(tmp_path / "w"))
+    more = _encoded_tiers(spark, 600, seed=9)
+    late = _encoded_tiers(spark, 600, seed=8, prefix="late-")
+    # the late keys are invisible until their key_dim rows are appended
+    rollup_d, hist_d = (more[i].unionByName(late[i]) for i in (0, 1))
+    day = ("bucket_ts", "2024-01-03 00:00:00", "2024-01-04 00:00:00")
+    in_day = (F.col("bucket_ts") >= day[1]) & (F.col("bucket_ts") < day[2])
+    renamed = late[2].withColumn("domain", F.concat(F.lit("z-"), "domain"))
+    cutoff = ("bucket_ts", "2024-01-05 00:00:00")
+    commits = [
+        ("rollup_1h", "append", rollup_d),
+        ("hist_1h", "append", hist_d),
+        ("key_dim", "append", late[2]),
+        ("rollup_1h", "overwrite_range", more[0].filter(in_day), *day),
+        ("hist_1h", "overwrite_range", more[1].filter(in_day), *day),
+        ("key_dim", "overwrite_range", renamed, "domain", "late-", "late-~"),
+        ("rollup_1h", "delete_below", *cutoff),
+        ("hist_1h", "delete_below", *cutoff),
+        ("key_dim", "delete_below", "domain", "d001.example"),
+        ("rollup_1h", "compact"),
+        ("hist_1h", "compact"),
+        ("key_dim", "compact"),
+    ]
+    prev = _answers(store)
+    for i, (table, op, *args) in enumerate(commits):
+        views = {t: _view(store, t) for t in ("rollup_1h", "hist_1h")}
+        getattr(store, op)(table, *args)
+        got = _answers(store)
+        assert got == _answers(_copy_store(store, str(tmp_path / f"fresh{i}"))), (op, table)
+        if op != "compact":
+            assert got != prev, (op, table)
+        for t, old in views.items():
+            new = _view(store, t)
+            assert new.df.storageLevel.useMemory
+            if table in (t, "key_dim"):
+                assert new is not old and old.df.storageLevel == StorageLevel.NONE, (op, t)
+            else:
+                assert new is old, (op, t)
+        prev = got
+
+
+def test_serving_views_are_per_store_root(spark, tmp_path):
+    """Two stores at different roots hold separate views: a commit at one
+    root changes neither the other's view nor its answers."""
+    a = _serving_store(spark, str(tmp_path / "a"))
+    b = _copy_store(a, str(tmp_path / "b"))
+    before = _answers(b)
+    assert _answers(a) == before
+    va, vb = _view(a, "rollup_1h"), _view(b, "rollup_1h")
+    assert va.df is not vb.df
+    a.delete_below("rollup_1h", "bucket_ts", "2024-01-05 00:00:00")
+    assert _answers(a) != before
+    assert _answers(b) == before
+    assert _view(b, "rollup_1h") is vb and vb.df.storageLevel.useMemory
+
+
+def test_serving_view_concurrent_queries_see_pre_or_post_commit(spark, tmp_path):
+    """Four clients query while a key_dim commit and then a tier
+    compaction land: every answer is the pre- or the post-commit one."""
+    import sys
+    import threading
+    import time
+
+    store = _serving_store(spark, str(tmp_path / "w"))
+    pre = _answers(store)
+    results, errors = [], []
+    go = threading.Event()
+
+    def client():
+        go.wait()
+        for _ in range(3):
+            try:
+                results.append(_answers(store))
+            except Exception as e:  # collected, asserted below
+                errors.append(e)
+
+    threads = [threading.Thread(target=client) for _ in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        go.set()
+        time.sleep(0.5)
+        store.delete_below("key_dim", "domain", "d001.example")
+        time.sleep(0.5)
+        store.compact("rollup_1h")
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    post = _answers(_copy_store(store, str(tmp_path / "fresh")))
+    assert not errors, errors
+    assert pre[0] != post[0] and pre[1] != post[1]
+    assert len(results) == 12
+    for rng, hist in results:
+        assert rng in (pre[0], post[0])
+        assert hist in (pre[1], post[1])
+
+
+def test_repeated_query_launches_fewer_jobs(spark, tmp_path):
+    """A repeated identical query on an unchanged store runs fewer Spark
+    jobs than the first: no schema inference, no key_dim broadcast, no
+    parquet scan."""
+    from fischer_spark.api import query_range
+
+    from tests.conftest import count_jobs
+
+    store = _serving_store(spark, str(tmp_path / "w"))
+
+    def query():
+        query_range(store, "crawl_rate", *_WIN, 7200).collect()
+
+    first = count_jobs(spark, query)
+    assert 0 < count_jobs(spark, query) < first

@@ -120,3 +120,22 @@ def test_compact_preserves_partition_spec(spark, store):
     assert store.read("t").count() == 2
     # pruning still works after compaction
     assert store.read("t", t_from="2024-01-02 00:00:00").count() == 1
+
+
+def test_reread_reuses_snapshot_relations(spark, store):
+    """A snapshot's parquet relation is resolved once per store: reading
+    it again starts no Spark job (no listing, no schema inference), a
+    commit is still seen by the next read, and compaction forgets the
+    relations of the snapshots it drops."""
+    from tests.conftest import count_jobs
+
+    store.append("t", _pts(spark, [("a", 1, 0, 1.0)]))
+    assert count_jobs(spark, lambda: store.read("t")) > 0
+    assert count_jobs(spark, lambda: store.read("t")) == 0
+    store.append("t", _pts(spark, [("a", 1, 1, 2.0)]))
+    assert store.read("t").count() == 2
+    dropped = {e["path"] for e in store.snapshots("t")}
+    assert dropped <= set(store._relations)
+    store.compact("t")
+    assert not dropped & set(store._relations)
+    assert store.read("t").count() == 2
